@@ -26,15 +26,15 @@ object SparkEntry {
     // the other mains already use so ad-hoc runs can point anywhere
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val dir = Scratch.dir("entry_funnel_etl")
-    Tables(spark, sfDir, "events")
+    val dated = Tables(spark, sfDir, "events")
       .withColumn("year", year(col("ts")))
       .withColumn("month", month(col("ts")))
-      .repartition(col("year"), col("month"))
+    dated.repartition(col("year"), col("month"))
       .write.mode("overwrite")
       .partitionBy("year", "month")
       .option("compression", "snappy")
       .parquet(dir)
-    spark.read.parquet(dir)
+    spark.read.schema(dated.schema).parquet(dir)
       .groupBy("event_type")
       .agg(count(lit(1)).as("cnt"), countDistinct(col("user_id")).as("users"))
       .orderBy("event_type")

@@ -88,11 +88,11 @@ object Bucketing {
     * full DuckDB oracle). */
   val sinkSortedRuns: QFn = (spark, sfDir) => {
     val dir = Scratch.dir(s"sorted_runs_${graft.util.Scratch.pathTag(sfDir)}")
-    Tables(spark, sfDir, "orders")
+    val sorted = Tables(spark, sfDir, "orders")
       .repartitionByRange(8, col("o_orderdate"))
       .sortWithinPartitions("o_orderdate")
-      .write.mode("overwrite").parquet(dir)
-    spark.read.parquet(dir)
+    sorted.write.mode("overwrite").parquet(dir)
+    spark.read.schema(sorted.schema).parquet(dir)
       .filter(col("o_orderdate") >= lit("1996-01-01")
         && col("o_orderdate") < lit("1996-04-01"))
       .groupBy("o_orderstatus")
@@ -122,13 +122,13 @@ object Bucketing {
       shiftleft(shiftright(bx, i).bitwiseAND(lit(1L)), 2 * i + 1)
         .bitwiseOR(shiftleft(shiftright(by, i).bitwiseAND(lit(1L)), 2 * i))
     }.reduce(_ bitwiseOR _)
-    o.crossJoin(broadcast(bounds))
+    val clustered = o.crossJoin(broadcast(bounds))
       .withColumn("z", z)
       .repartitionByRange(8, col("z"))
       .sortWithinPartitions("z")
       .drop("z", "ck_min", "ck_max", "tp_min", "tp_max")
-      .write.mode("overwrite").parquet(dir)
-    spark.read.parquet(dir)
+    clustered.write.mode("overwrite").parquet(dir)
+    spark.read.schema(clustered.schema).parquet(dir)
       .filter(col("o_custkey").between(40, 110)
         && col("o_totalprice").between(100000, 150000))
       .groupBy("o_orderstatus")

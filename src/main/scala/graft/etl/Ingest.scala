@@ -77,14 +77,15 @@ object Ingest {
     * filter on o_year/o_month — the reference's Athena cost win. */
   val scanParquetPartitioned: QFn = (spark, sfDir) => {
     val dir = Scratch.dir("scan_parquet_partitioned")
-    Tables(spark, sfDir, "orders")
+    val dated = Tables(spark, sfDir, "orders")
       .withColumn("o_year", year(col("o_orderdate")))
       .withColumn("o_month", month(col("o_orderdate")))
-      // cluster rows by partition key before the write: one file per
-      // (year, month) instead of tasks × partitions small files
-      .repartition(col("o_year"), col("o_month"))
+    // cluster rows by partition key before the write: one file per
+    // (year, month) instead of tasks × partitions small files
+    dated.repartition(col("o_year"), col("o_month"))
       .write.mode("overwrite").partitionBy("o_year", "o_month").parquet(dir)
-    spark.read.parquet(dir)
+    // the partition columns' types come from the supplied schema
+    spark.read.schema(dated.schema).parquet(dir)
       .groupBy("o_year", "o_month")
       .agg(count(lit(1)).as("cnt"))
       .orderBy("o_year", "o_month")
@@ -290,18 +291,18 @@ object Ingest {
     * difference" conversion). zstd + partitionBy(year, month). */
   val sinkParquetPartitionedCompressed: QFn = (spark, sfDir) => {
     val dir = Scratch.dir("sink_parquet_partitioned_compressed")
-    Tables(spark, sfDir, "orders")
+    val dated = Tables(spark, sfDir, "orders")
       .withColumn("o_year", year(col("o_orderdate")))
       .withColumn("o_month", month(col("o_orderdate")))
-      // avoid the tasks × partitions small-file explosion (see
-      // scan_parquet_partitioned); at 100 TB add a salt column to this
-      // repartition when single partitions exceed one task's write budget
-      .repartition(col("o_year"), col("o_month"))
+    // avoid the tasks × partitions small-file explosion (see
+    // scan_parquet_partitioned); at 100 TB add a salt column to this
+    // repartition when single partitions exceed one task's write budget
+    dated.repartition(col("o_year"), col("o_month"))
       .write.mode("overwrite")
       .partitionBy("o_year", "o_month")
       .option("compression", "zstd")
       .parquet(dir)
-    spark.read.parquet(dir)
+    spark.read.schema(dated.schema).parquet(dir)
       .select("o_orderkey", "o_year", "o_month")
       .orderBy("o_orderkey")
   }
@@ -349,7 +350,7 @@ object Ingest {
     val bound = insertPositional(shuffled.select(target.map(col): _*), target)
     val dir = Scratch.dir("sink_table_positional")
     bound.write.mode("overwrite").parquet(dir)
-    spark.read.parquet(dir).orderBy("c_custkey")
+    spark.read.schema(bound.schema).parquet(dir).orderBy("c_custkey")
   }
 
   /** insertInto-style positional bind: names are taken from the target, not
@@ -391,13 +392,13 @@ object Ingest {
     * oracle pins content preservation. */
   val sinkCompactSmallFiles: QFn = (spark, sfDir) => {
     val dir = Scratch.dir("sink_compact_small_files")
-    Tables(spark, sfDir, "events")
-      .repartition(64).write.mode("overwrite").parquet(s"$dir/small")
-    val small = spark.read.parquet(s"$dir/small")
+    val events = Tables(spark, sfDir, "events")
+    events.repartition(64).write.mode("overwrite").parquet(s"$dir/small")
+    val small = spark.read.schema(events.schema).parquet(s"$dir/small")
     val totalBytes = Scratch.dataFiles(s"$dir/small").map(_.length).sum
     val target = math.max(1, math.ceil(totalBytes / (128.0 * 1024 * 1024)).toInt)
     small.repartition(target).write.mode("overwrite").parquet(s"$dir/compacted")
-    spark.read.parquet(s"$dir/compacted")
+    spark.read.schema(events.schema).parquet(s"$dir/compacted")
       .groupBy("event_type")
       .agg(count(lit(1)).as("cnt"),
         countDistinct(col("event_id")).as("n_ids"),

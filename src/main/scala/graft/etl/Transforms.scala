@@ -194,12 +194,12 @@ object Transforms {
   val fnNestedRoundtrip: QFn = (spark, sfDir) => {
     import graft.util.Scratch
     val dir = Scratch.dir("fn_nested_roundtrip")
-    Tables(spark, sfDir, "orders")
+    val nested = Tables(spark, sfDir, "orders")
       .groupBy("o_custkey")
       .agg(sort_array(collect_list(
         struct(col("o_orderkey"), col("o_totalprice")))).as("orders"))
-      .write.mode("overwrite").parquet(dir)
-    spark.read.parquet(dir)
+    nested.write.mode("overwrite").parquet(dir)
+    spark.read.schema(nested.schema).parquet(dir)
       .select(col("o_custkey"), explode(col("orders")).as("o"))
       .select(col("o_custkey"), col("o.o_orderkey").as("o_orderkey"),
         col("o.o_totalprice").as("o_totalprice"))

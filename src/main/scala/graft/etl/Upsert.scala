@@ -125,7 +125,7 @@ object Upsert {
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {
       val touched = stg.select("o_year").distinct()
-      val refreshed = spark.read.parquet(dir)
+      val refreshed = spark.read.schema(orders.schema).parquet(dir)
         .join(broadcast(touched), Seq("o_year")) // partition-prunes the scan
         .join(stg.select("o_orderkey"), Seq("o_orderkey"), "left_anti")
         .unionByName(stg)
@@ -133,7 +133,7 @@ object Upsert {
       refreshed.repartition(col("o_year"), pmod(col("o_orderkey"), lit(WriteSpread.n)))
         .write.mode("overwrite").partitionBy("o_year").parquet(dir)
     } finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
-    spark.read.parquet(dir)
+    spark.read.schema(orders.schema).parquet(dir)
       .select("o_orderkey", "o_totalprice", "o_orderstatus")
       .orderBy("o_orderkey")
   }
@@ -331,8 +331,8 @@ object Upsert {
       .agg(count(lit(1)).as("n_orders"),
         sum(col("o_totalprice").cast("decimal(28,4)")).as("rev"))
     // stored aggregate = everything before the current load window
-    partial(orders.filter(col("o_orderdate") < lit("2001-01-01")))
-      .write.mode("overwrite").parquet(s"$dir/v1")
+    val stored = partial(orders.filter(col("o_orderdate") < lit("2001-01-01")))
+    stored.write.mode("overwrite").parquet(s"$dir/v1")
     // incremental refresh: delta partials ∪ stored partials, re-summed.
     // Written to a NEW version dir (round 21) — the old in-place overwrite
     // of the dir being read forced an eager localCheckpoint (a whole extra
@@ -340,11 +340,11 @@ object Upsert {
     // commits are also what a real table format does (a snapshot dir /
     // Delta commit, never a read-modify-overwrite of live files).
     val delta = partial(orders.filter(col("o_orderdate") >= lit("2001-01-01")))
-    spark.read.parquet(s"$dir/v1").unionByName(delta)
+    val refreshed = spark.read.schema(stored.schema).parquet(s"$dir/v1").unionByName(delta)
       .groupBy("o_orderstatus", "o_year")
       .agg(sum(col("n_orders")).as("n_orders"), sum(col("rev")).as("rev"))
-      .write.mode("overwrite").parquet(s"$dir/v2")
-    spark.read.parquet(s"$dir/v2")
+    refreshed.write.mode("overwrite").parquet(s"$dir/v2")
+    spark.read.schema(refreshed.schema).parquet(s"$dir/v2")
       .select(col("o_orderstatus"), col("o_year"), col("n_orders"),
         round(col("rev").cast("double"), 2).as("revenue"))
       .orderBy("o_orderstatus", "o_year")

@@ -307,22 +307,27 @@ case class SortedIntersectCount(left: Expression, right: Expression)
       val vb = b.getLong(j)
       if (va < vb) {
         i += 1
-        if (i < na && a.getLong(i) <= va)
-          throw new IllegalArgumentException(
-            s"sorted_intersect_count: left array not strictly ascending at $i")
+        checkAscent(a, na, i, va, "left")
       } else if (va > vb) {
         j += 1
-        if (j < nb && b.getLong(j) <= vb)
-          throw new IllegalArgumentException(
-            s"sorted_intersect_count: right array not strictly ascending at $j")
+        checkAscent(b, nb, j, vb, "right")
       } else {
         c += 1
         i += 1
         j += 1
+        checkAscent(a, na, i, va, "left")
+        checkAscent(b, nb, j, vb, "right")
       }
     }
     c
   }
+
+  /** Every advance checks the element it lands on, the equal branch's
+    * double advance included: without that, [1,1]∩[1,1] would count 2. */
+  private def checkAscent(arr: ArrayData, n: Int, k: Int, prev: Long, side: String): Unit =
+    if (k < n && arr.getLong(k) <= prev)
+      throw new IllegalArgumentException(
+        s"sorted_intersect_count: $side array not strictly ascending at $k")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedIntersectCount =

@@ -435,13 +435,13 @@ object DedupOps {
         .select("doc_a", "doc_b")
       val dir = graft.util.Scratch.dir(
         s"base_clusters_${graft.util.Scratch.pathTag(sfDir)}")
-      connectedComponents(
+      val labels = connectedComponents(
         Tables(spark, sfDir, "documents")
           .filter(pmod(col("doc_id"), lit(2)) === 0)
           .select(col("doc_id"), col("doc_id").as("label")),
         basePairs)
-        .write.mode("overwrite").parquet(s"$dir/labels")
-      spark.read.parquet(s"$dir/labels")
+      labels.write.mode("overwrite").parquet(s"$dir/labels")
+      spark.read.schema(labels.schema).parquet(s"$dir/labels")
     })
 
   /** Incremental near-dup cluster maintenance (round 19, VERDICT r18 #7

@@ -100,14 +100,14 @@ object TextOps {
   val llmExportShards: QFn = (spark, sfDir) => {
     val dir = graft.util.Scratch.dir(
       s"export_shards_${graft.util.Scratch.pathTag(sfDir)}")
-    Tables(spark, sfDir, "documents")
+    val sharded = Tables(spark, sfDir, "documents")
       .select(col("doc_id"),
         pmod(pmod(col("doc_id") * 48271L, lit(2147483647L)), lit(64))
           .cast("int").as("shard"),
         size(tokens).as("n_tokens"))
-      .repartition(col("shard"))
+    sharded.repartition(col("shard"))
       .write.mode("overwrite").partitionBy("shard").parquet(dir)
-    spark.read.parquet(dir)
+    spark.read.schema(sharded.schema).parquet(dir)
       .groupBy("shard")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).cast("long").as("total_tokens"))

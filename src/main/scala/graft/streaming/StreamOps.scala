@@ -48,8 +48,12 @@ object StreamOps {
   // via [[stageFixtures]] in warmup; Verify and the specs stage lazily on
   // first use (they are untimed).
   // -------------------------------------------------------------------------
-  private val fixtureCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** One staged fixture: its dir once staged. Stagers of the same key
+    * serialize on the cell, so a restage never wipes a dir another stager
+    * is writing into. */
+  private final class Fixture { var dir: String = null }
+
+  private val fixtures = new java.util.concurrent.ConcurrentHashMap[String, Fixture]()
 
   /** Memoized fixture dir: `stage` runs once per (session, sfDir, name)
     * into a fresh dir; later calls return the staged path. The cached dir
@@ -61,25 +65,20 @@ object StreamOps {
   private def stagedFixture(spark: SparkSession, sfDir: String, name: String)(
       stage: String => Unit): String = {
     val key = spark.sparkContext.applicationId + "|" + sfDir + "|" + name
-    def staged(): String = {
-      val dir = Scratch.dir(s"stream_fix_${name}_${Scratch.pathTag(sfDir)}")
-      stage(dir)
-      dir
-    }
     // recursive: fileUpsertFix stages into SUBDIRS (hist/, incoming/), so a
     // top-level dataFiles() probe would read a healthy fixture as wiped
     def hasDataFile(f: java.io.File): Boolean =
       if (f.isDirectory)
         Option(f.listFiles()).getOrElse(Array.empty).exists(hasDataFile)
       else f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith(".")
-    val dir = fixtureCache.getOrElseUpdate(key, staged())
-    if (hasDataFile(new java.io.File(dir))) dir
-    else {
-      // wiped under us: drop the stale entry and restage (drop-then-update
-      // keeps the TrieMap idiom race-safe — a concurrent caller at worst
-      // restages the same deterministic content into the same dir)
-      fixtureCache.remove(key)
-      fixtureCache.getOrElseUpdate(key, staged())
+    val fixture = fixtures.computeIfAbsent(key, _ => new Fixture)
+    fixture.synchronized {
+      if (fixture.dir == null || !hasDataFile(new java.io.File(fixture.dir))) {
+        val dir = Scratch.dir(s"stream_fix_${name}_${Scratch.pathTag(sfDir)}")
+        stage(dir)
+        fixture.dir = dir
+      }
+      fixture.dir
     }
   }
 
@@ -103,14 +102,9 @@ object StreamOps {
     * thread pool overlaps them so the funnels back-fill each other
     * (job descriptions are thread-local; FIFO scheduling gives exactly the
     * back-fill behaviour the guide describes). Safe because each staging
-    * writes its own fixture dir, the memoization keys are distinct, and
-    * the shared table loads are resolved BEFORE the pool below — so no
-    * staging thread races the events conf-dance inside Tables.load. */
+    * writes its own fixture dir and the memoization keys are distinct. */
   def stageFixtures(spark: SparkSession, sfDir: String): Unit = {
     val t0 = System.nanoTime()
-    // resolve shared inputs once, single-threaded: every staging thread
-    // then hits the Tables memo instead of racing schema resolution
-    Seq("events", "orders", "documents").foreach(Tables(spark, sfDir, _))
     val stagings: Seq[(String, () => String)] = Seq(
       "events4" -> (() => eventSrc4(spark, sfDir)),
       "wm_late" -> (() => watermarkLateSrc(spark, sfDir)),
@@ -298,8 +292,8 @@ object StreamOps {
     // fresh per invocation — only the immutable INPUTS are pre-staged
     val base = Scratch.dir("stream_file_source_upsert")
     val dirs = Array(s"$base/stateA", s"$base/stateB")
-    // schema of the staged drops, derived from the SAME expression that
-    // wrote them (plan-only — no action)
+    // schema of the staged drops and of every state dir, derived from the
+    // SAME expression that wrote them (plan-only — no action)
     val sel = Seq("o_orderkey", "o_totalprice", "o_orderstatus", "o_orderdate")
     val schema = Tables(spark, sfDir, "orders")
       .withColumn("o_totalprice", col("o_totalprice") * 2)
@@ -313,7 +307,7 @@ object StreamOps {
       .queryName(uniq("stream_file_source_upsert"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val next = dirs(i % 2); i += 1
-        Upsert.upsert(spark.read.parquet(cur), batch, "o_orderkey")
+        Upsert.upsert(spark.read.schema(schema).parquet(cur), batch, "o_orderkey")
           .write.mode("overwrite").parquet(next)
         cur = next
         ()
@@ -323,7 +317,7 @@ object StreamOps {
       .start()
     q.awaitTermination()
 
-    spark.read.parquet(cur)
+    spark.read.schema(schema).parquet(cur)
       .select("o_orderkey", "o_totalprice", "o_orderstatus")
       .orderBy("o_orderkey")
   }
@@ -793,7 +787,7 @@ object StreamOps {
       .writeStream
       .queryName(uniq("stream_dedup_incremental"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val state = spark.read.parquet(cur)
+        val state = spark.read.schema(docs.schema).parquet(cur)
         // one keeper per hash within the batch, then only never-seen hashes
         val fresh = batch.groupBy("h").agg(min(col("doc_id")).as("doc_id"))
           .join(state, Seq("h"), "left_anti")
@@ -807,7 +801,7 @@ object StreamOps {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(cur).select("doc_id", "h").orderBy("doc_id")
+    spark.read.schema(docs.schema).parquet(cur).select("doc_id", "h").orderBy("doc_id")
   }
 
   /** Exactly-once APPEND sink via a batch-id manifest — the idempotence
@@ -910,7 +904,8 @@ object StreamOps {
     val replayPaths = firstDrop.toSeq.sorted.map(f => s"$incoming/$f")
     commit(spark.read.schema(feed.schema).parquet(replayPaths: _*)
       .withColumn("o_totalprice", -col("o_totalprice")), 0L)
-    spark.read.parquet(outDir)
+    // batch_id=<n> dirs still surface as a discovered partition column
+    spark.read.schema(feed.schema).parquet(outDir)
       .select(sel.map(col): _*)
       .orderBy("o_orderkey")
   }

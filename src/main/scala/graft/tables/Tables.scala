@@ -1,6 +1,14 @@
 package graft.tables
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Loads the driver-generated parquet tables (TESTDATA.md) and stands in
   * for the reference's three catalogs — RDS MySQL, Redshift, and the Glue
@@ -12,43 +20,17 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Round 21 (guide §1.2/§6 — driver-side fixed cost): `spark.read.parquet`
-  // resolves the schema from the parquet footer and builds a fresh
-  // InMemoryFileIndex on EVERY call, and nearly every one of the 225 timed
-  // operators loads 1-3 tables through here — tens of ms of driver work per
-  // timed row for files that are immutable for the life of the session.
-  //
-  // Round 22 (ADVICE r21 medium): round 21 memoized the resolved DataFrame
-  // per (session, sfDir, name) in a WeakHashMap keyed on the session — but
-  // a Dataset strongly references its SparkSession, so the VALUE map
-  // strongly referenced the KEY and no entry was ever collectable: every
-  // short-lived spec session and per-op cloned stream session stayed
-  // pinned for the JVM's life, accumulating SessionStates. Redesigned in
-  // two measured layers (R22Micro, BASELINE.md round 22):
-  //
-  //  1. SESSION-INDEPENDENT schema cache per (sfDir, name): the expensive,
-  //     immutable part of a load is parquet SCHEMA RESOLUTION — measured
-  //     at ~60-77 ms/call (footer read + inference + the events
-  //     inference-flag dance) vs ~5-10 ms for a schema-supplied
-  //     `read.schema(s).parquet(path)` rebuild. A StructType holds no
-  //     session reference, so this layer can never pin anything.
-  //  2. BOUNDED per-session DataFrame memo: the ~5-10 ms rebuild is still
-  //     real money across the ~300+ loads of a bench session, so resolved
-  //     DataFrames stay memoized per session — but in a size-capped LRU
-  //     ([[MaxCachedSessions]] sessions, identity-keyed) instead of the
-  //     never-collectable WeakHashMap: the long-lived bench/Verify session
-  //     keeps its ~0 ms hits, while short-lived spec sessions and per-op
-  //     stream clones churn through the LRU and can pin at most
-  //     MaxCachedSessions SessionStates at any time — bounded by design,
-  //     which is what the ADVICE finding was actually about.
-  //
-  // Still plans only, never data or results. The adjacent `registered`
-  // map stays weak-keyed and safe because its value is a String.
-  private case class ResolvedTable(schema: org.apache.spark.sql.types.StructType,
-                                   tsNanosAsLong: Boolean)
+  // A table's schema is read once per (sfDir, name) from its parquet footer,
+  // on the driver and with no Spark job, converted the way Spark's own
+  // inference converts it. Every load then builds a plan-only
+  // `read.schema(s).parquet(path)` relation over that schema, memoized per
+  // session in a bounded LRU so short-lived sessions are never pinned.
+  private case class ResolvedTable(schema: StructType, tsNanosAsLong: Boolean)
 
-  private val resolved =
-    scala.collection.concurrent.TrieMap.empty[(String, String), ResolvedTable]
+  private val resolved = new ConcurrentHashMap[(String, String), ResolvedTable]()
+
+  /** Footers read so far: one per resolved (sfDir, name). */
+  private[graft] val footerReads = new AtomicLong
 
   /** Upper bound on sessions whose resolved DataFrames stay memoized. */
   private[graft] val MaxCachedSessions = 4
@@ -81,78 +63,72 @@ object Tables {
     perSession.getOrElseUpdate((sfDir, name), build(spark, sfDir, name))
   }
 
-  /** Cheap per-session relation build over the cached schema — no footer
-    * read, no inference, no flag dance. */
+  /** The table's schema as every load reads it: the footer schema, built
+    * once per (sfDir, name). */
+  private[graft] def schema(spark: SparkSession, sfDir: String, name: String): StructType =
+    resolvedTable(spark, sfDir, name).schema
+
+  private def resolvedTable(spark: SparkSession, sfDir: String, name: String): ResolvedTable =
+    resolved.computeIfAbsent((sfDir, name), _ => resolve(spark, sfDir, name))
+
+  /** Cheap per-session relation build over the resolved schema. */
   private def build(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val r = resolved.getOrElseUpdate((sfDir, name), resolve(spark, sfDir, name))
+    val r = resolvedTable(spark, sfDir, name)
     val df = spark.read.schema(r.schema).parquet(s"$sfDir/$name.parquet")
     if (r.tsNanosAsLong)
       // generation (a): ts stored as TIMESTAMP(NANOS), read as raw long
-      // (the cached schema says LongType) and truncated to micros in-plan —
+      // (the resolved schema says LongType) and truncated to micros in-plan —
       // the same truncation DuckDB applies for ns→µs
       df.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
     else df
   }
 
-  /** One-time schema resolution per (sfDir, name) — the only step that
-    * reads parquet footers or needs the events inference-flag dance. The
-    * result is session-independent: a StructType plus the ts-generation
-    * verdict. Execution-time behavior is unchanged from the round-21 shape:
-    * the relation's catalyst schema (what `resolve` captured) is what
-    * drives the scan — the inference flags were ALREADY restored before any
-    * action ran (see the scope note below), so skipping inference via
-    * read.schema() executes the identical plan. */
+  /** Reads the table's footer and converts its schema with the session's
+    * parquet flags, except for `events`. events.ts has shipped in two
+    * parquet generations:
+    *  (a) TIMESTAMP(NANOS), which Spark 4 refuses to read natively — read
+    *      as raw nanos (`nanosAsLong`) and truncated to micros in [[build]];
+    *  (b) TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark 4 infers as
+    *      TIMESTAMP_NTZ by default — with `inferTimestampNTZ` off the
+    *      stored micros map verbatim onto TimestampType's UTC instant,
+    *      bit-identical to (a) and independent of the session time zone.
+    * The flags are converter arguments, so the session conf is never
+    * touched. */
   private def resolve(spark: SparkSession, sfDir: String, name: String): ResolvedTable = {
-    if (name == "events") {
-      // events.ts has shipped in two parquet generations:
-      //   (a) TIMESTAMP(NANOS), which Spark 4 refuses to read natively —
-      //       read the raw nanos as long (legacy flag) and truncate to
-      //       micros in-plan (the same truncation DuckDB applies for ns→µs);
-      //   (b) TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark 4 infers
-      //       as TIMESTAMP_NTZ by default — disable that inference so the
-      //       stored micros map verbatim onto TimestampType's UTC instant,
-      //       bit-identical to what (a)'s div-1000 produced and independent
-      //       of the session time zone (an NTZ→LTZ cast would shift by it).
-      // Scope of the set/restore (ADVICE r8 correction): nanosAsLong is
-      // consulted ONLY while the relation's schema is resolved (the eager
-      // part of read.parquet), but inferTimestampNTZ is ALSO re-read from
-      // the session conf at physical-planning time (ParquetFileFormat
-      // copies it into the executor hadoopConf) — i.e. after the finally
-      // below restores it. That divergence is benign here because the
-      // analysis-time catalyst schema (TimestampType) drives the vectorized
-      // updater and an NTZ-file→LTZ-catalyst read is permitted; it would
-      // bite if mergeSchema or executor-side schema conversion were added
-      // to this read. A per-read parquet option would remove the divergence
-      // entirely, but Spark 4.1.2's ParquetOptions has no inferTimestampNTZ
-      // read option (verified against the jar — the option string is
-      // silently ignored and inference runs anyway), so the session-conf
-      // dance is the only spelling available. Restore both immediately:
-      // leaving them set would silently change how OTHER timestamp parquet
-      // reads behave for the rest of the session.
-      // synchronized: the set/restore races if two threads resolve reads on
-      // the same session concurrently (conf is session-global mutable
-      // state) — any concurrent read.parquet on this session during the
-      // window also sees NTZ inference off; no concurrent loads exist in
-      // this repo (Verify/Bench load sequentially; specs share the fixture
-      // session serially), and the window is schema-resolution-short.
-      this.synchronized {
-        val flags = Seq(
-          "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-          "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false")
-        val prev = flags.map { case (k, _) => k -> spark.conf.getOption(k) }
-        flags.foreach { case (k, v) => spark.conf.set(k, v) }
-        try {
-          val schema = spark.read.parquet(s"$sfDir/$name.parquet").schema
-          // generation (a) iff ts resolved as raw nanos-long; the micros
-          // truncation is applied per-call in apply() above
-          ResolvedTable(schema,
-            schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        } finally prev.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
-      }
-    } else ResolvedTable(spark.read.parquet(s"$sfDir/$name.parquet").schema, false)
+    val conf = spark.sessionState.conf
+    val events = name == "events"
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = !events && conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = events || conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+    // readSchemaFromFooter prefers the Spark schema a Spark writer stored
+    // in the footer, as Spark's own inference does
+    val schema = ParquetFileFormat.readSchemaFromFooter(
+      footer(spark, s"$sfDir/$name.parquet"), converter)
+    ResolvedTable(schema, events && schema("ts").dataType == LongType)
+  }
+
+  /** The footer Spark's inference would read: the path itself if it is a
+    * file, otherwise the first data file in path order, skipping hidden
+    * (`_`, `.`) names. */
+  private def footer(spark: SparkSession, path: String): Footer = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(hadoopConf)
+    def hidden(s: FileStatus): Boolean = {
+      val n = s.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }
+    def dataFiles(s: FileStatus): Seq[FileStatus] =
+      if (s.isFile) Seq(s)
+      else fs.listStatus(s.getPath).toSeq.filterNot(hidden).flatMap(dataFiles)
+    val file = dataFiles(fs.getFileStatus(root)).minByOption(_.getPath.toString)
+      .getOrElse(throw new IllegalArgumentException(s"no parquet data file under $path"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, hadoopConf))
+    footerReads.incrementAndGet()
+    try new Footer(file.getPath, reader.getFooter) finally reader.close()
   }
 
   // Memoization for registerAll (VERDICT r10 #2): registering all ten views

@@ -173,5 +173,15 @@ class TextHashSpec extends AnyFunSuite {
         .collect()
     }
     assert(ex.getMessage != null)
+    // duplicates on a match: the equal branch advances both sides, so its
+    // ascent checks are what stop [1,1]∩[1,1] from counting 2
+    Seq("array(1L,1L), array(1L,1L)", "array(1L,1L,2L), array(1L,1L,3L)").foreach { args =>
+      val dup = intercept[Exception] {
+        spark.sql(s"SELECT sorted_intersect_count($args)").collect()
+      }
+      val causes = Iterator.iterate[Throwable](dup)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(e => String.valueOf(e.getMessage).contains("not strictly ascending")),
+        s"($args): $dup")
+    }
   }
 }
